@@ -7,8 +7,11 @@ import graft.operators.{Relational, StarSchema}
 /** The reference's three pipelines (SURVEY.md §3), re-expressed as single
   * lazy Spark plans. Where the reference crosses an Airflow task/process
   * boundary and serializes whole datasets through XCom or /tmp parquet
-  * (merge_to_dw.py:99, 107, 120→142), this engine has one Catalyst-planned
-  * job whose only physical boundaries are shuffles.
+  * (merge_to_dw.py:99, 107, 120→142), this engine has Catalyst-planned
+  * jobs whose only physical boundaries are shuffles. Every function here
+  * returns lazy plans; the caller picks what to materialize (`EtlJobs`
+  * stages the merge once and feeds it to [[buildDims]] and
+  * [[buildFacts]]).
   */
 object Pipelines {
 
@@ -88,31 +91,48 @@ object Pipelines {
   /** Pipeline 3.1's load step re-architected set-based (S11/J2): six
     * dimensions built by dropDuplicates + xxhash64 surrogate keys, facts
     * resolved via six broadcast joins, gated on FK completeness
-    * (merge_to_dw.py:124-325). Returns every warehouse table.
+    * (merge_to_dw.py:124-325). Returns every warehouse table as one plan
+    * per table, each reading `merged` directly.
     */
   def buildWarehouse(merged: DataFrame): Map[String, DataFrame] = {
-    val dimSong = StarSchema.buildDim(merged, "song_id", Seq("track_name"))
-      .withColumnRenamed("track_name", "song_name")
-    val dimArtist = StarSchema.buildDim(merged, "artist_id", Seq("artists"))
-      .withColumnRenamed("artists", "artist_name")
-    val dimAlbum = StarSchema.buildDim(merged, "album_id", Seq("album_name"))
-    val dimGenre = StarSchema.buildDim(merged, "genre_id", Seq("genero", "subgenero"))
-    val dimCategory = StarSchema.buildDim(merged, "category_id", Seq("category"))
-    val dimEvent = StarSchema.buildDim(merged, "event_id",
-      Seq("year", "title", "published_at", "updated_at"))
+    val dims = buildDims(merged)
+    dims ++ buildFacts(merged, dims)
+  }
 
-    def kv(df: DataFrame, key: Seq[String], id: String) =
+  /** The six dimensions of [[buildWarehouse]], keyed by table name
+    * (merge_to_dw.py:202-251).
+    */
+  def buildDims(merged: DataFrame): Map[String, DataFrame] = Map(
+    "Dim_Song" -> StarSchema.buildDim(merged, "song_id", Seq("track_name"))
+      .withColumnRenamed("track_name", "song_name"),
+    "Dim_Artist" -> StarSchema.buildDim(merged, "artist_id", Seq("artists"))
+      .withColumnRenamed("artists", "artist_name"),
+    "Dim_Album" -> StarSchema.buildDim(merged, "album_id", Seq("album_name")),
+    "Dim_Genre" -> StarSchema.buildDim(merged, "genre_id", Seq("genero", "subgenero")),
+    "Dim_Category" -> StarSchema.buildDim(merged, "category_id", Seq("category")),
+    "Dim_Event" -> StarSchema.buildDim(merged, "event_id",
+      Seq("year", "title", "published_at", "updated_at")))
+
+  /** The two fact tables of [[buildWarehouse]], keyed by table name, with
+    * every foreign key resolved against `dims` — the plans
+    * [[buildDims]] returns, or the same tables read back after they were
+    * written (the reference loads its dimensions before its facts,
+    * merge_to_dw.py:198-300).
+    */
+  def buildFacts(merged: DataFrame,
+                 dims: Map[String, DataFrame]): Map[String, DataFrame] = {
+    def kv(dim: String, key: Seq[String], id: String) =
       StarSchema.resolveFk(_: DataFrame,
-        df.withColumnsRenamed(Map("song_name" -> "track_name",
+        dims(dim).withColumnsRenamed(Map("song_name" -> "track_name",
           "artist_name" -> "artists")), key, id)
 
     val resolved = Seq(
-      kv(dimSong, Seq("track_name"), "song_id"),
-      kv(dimArtist, Seq("artists"), "artist_id"),
-      kv(dimAlbum, Seq("album_name"), "album_id"),
-      kv(dimGenre, Seq("genero", "subgenero"), "genre_id"),
-      kv(dimCategory, Seq("category"), "category_id"),
-      kv(dimEvent, Seq("year", "title", "published_at", "updated_at"), "event_id")
+      kv("Dim_Song", Seq("track_name"), "song_id"),
+      kv("Dim_Artist", Seq("artists"), "artist_id"),
+      kv("Dim_Album", Seq("album_name"), "album_id"),
+      kv("Dim_Genre", Seq("genero", "subgenero"), "genre_id"),
+      kv("Dim_Category", Seq("category"), "category_id"),
+      kv("Dim_Event", Seq("year", "title", "published_at", "updated_at"), "event_id")
     ).foldLeft(merged)((df, f) => f(df))
 
     // Spotify fact rows need song+artist+album+genre keys; grammy fact rows
@@ -132,11 +152,6 @@ object Pipelines {
       .select(col("song_id"), col("artist_id"), col("category_id"),
         col("event_id"), col("workers"), col("img"), col("winner"))
 
-    Map(
-      "Dim_Song" -> dimSong, "Dim_Artist" -> dimArtist,
-      "Dim_Album" -> dimAlbum, "Dim_Genre" -> dimGenre,
-      "Dim_Category" -> dimCategory, "Dim_Event" -> dimEvent,
-      "Fact_Spotify_Tracks" -> factSpotify,
-      "Fact_Grammy_Awards" -> factGrammy)
+    Map("Fact_Spotify_Tracks" -> factSpotify, "Fact_Grammy_Awards" -> factGrammy)
   }
 }

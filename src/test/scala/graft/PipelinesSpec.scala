@@ -90,6 +90,24 @@ class PipelinesSpec extends AnyFunSuite {
     assert(dangling == 0)
   }
 
+  test("warehouse split: facts resolved against dims read back from parquet") {
+    val wh = Pipelines.buildWarehouse(merged)
+    val dims = Pipelines.buildDims(merged)
+    assert(dims.keySet == wh.keySet.filter(_.startsWith("Dim_")))
+    val dir = java.nio.file.Files.createTempDirectory("warehouse-dims").toString
+    val written = dims.map { case (name, df) =>
+      Tables.writeParquet(df, s"$dir/$name")
+      name -> spark.read.parquet(s"$dir/$name")
+    }
+    val facts = Pipelines.buildFacts(merged, written)
+    assert(facts.keySet == Set("Fact_Spotify_Tracks", "Fact_Grammy_Awards"))
+    facts.foreach { case (name, df) =>
+      assert(df.columns.toSeq == wh(name).columns.toSeq, name)
+      assert(df.exceptAll(wh(name)).isEmpty, name)
+      assert(wh(name).exceptAll(df).isEmpty, name)
+    }
+  }
+
   test("grammy CSV: lenient year ingest keeps valid rows typed") {
     val years = grammys.select($"year").as[Option[Int]].collect()
     assert(years.flatten.min == 1968)
