@@ -10,8 +10,8 @@ import graft.operators.{Relational, StarSchema}
   * (merge_to_dw.py:99, 107, 120→142), this engine has Catalyst-planned
   * jobs whose only physical boundaries are shuffles. Every function here
   * returns lazy plans; the caller picks what to materialize (`EtlJobs`
-  * stages the merge once and feeds it to [[buildDims]] and
-  * [[buildFacts]]).
+  * stages the merge once and writes every table of [[buildWarehouse]]
+  * from it).
   */
 object Pipelines {
 
@@ -89,15 +89,15 @@ object Pipelines {
   }
 
   /** Pipeline 3.1's load step re-architected set-based (S11/J2): six
-    * dimensions built by dropDuplicates + xxhash64 surrogate keys, facts
-    * resolved via six broadcast joins, gated on FK completeness
-    * (merge_to_dw.py:124-325). Returns every warehouse table as one plan
-    * per table, each reading `merged` directly.
+    * dimensions built by dropDuplicates + xxhash64 surrogate keys, and two
+    * facts whose foreign keys are derived from the same hash
+    * ([[StarSchema.surrogateKey]]) instead of looked up, gated on FK
+    * completeness (merge_to_dw.py:124-325). Returns every warehouse table
+    * as one plan per table, each reading `merged` directly and none
+    * depending on another, so all 8 can be written concurrently.
     */
-  def buildWarehouse(merged: DataFrame): Map[String, DataFrame] = {
-    val dims = buildDims(merged)
-    dims ++ buildFacts(merged, dims)
-  }
+  def buildWarehouse(merged: DataFrame): Map[String, DataFrame] =
+    buildDims(merged) ++ buildFacts(merged)
 
   /** The six dimensions of [[buildWarehouse]], keyed by table name
     * (merge_to_dw.py:202-251).
@@ -113,32 +113,27 @@ object Pipelines {
     "Dim_Event" -> StarSchema.buildDim(merged, "event_id",
       Seq("year", "title", "published_at", "updated_at")))
 
-  /** The two fact tables of [[buildWarehouse]], keyed by table name, with
-    * every foreign key resolved against `dims` — the plans
-    * [[buildDims]] returns, or the same tables read back after they were
-    * written (the reference loads its dimensions before its facts,
-    * merge_to_dw.py:198-300).
+  /** The two fact tables of [[buildWarehouse]], keyed by table name. Each
+    * foreign key is [[StarSchema.surrogateKey]] of the fact row's own
+    * natural key — the id [[buildDims]] assigns that key from the same
+    * `merged`, so it equals what a lookup against those dimensions would
+    * return (the reference SELECTs each id back after its dim INSERT,
+    * merge_to_dw.py:153-170, 198-300), with no join.
     */
-  def buildFacts(merged: DataFrame,
-                 dims: Map[String, DataFrame]): Map[String, DataFrame] = {
-    def kv(dim: String, key: Seq[String], id: String) =
-      StarSchema.resolveFk(_: DataFrame,
-        dims(dim).withColumnsRenamed(Map("song_name" -> "track_name",
-          "artist_name" -> "artists")), key, id)
-
-    val resolved = Seq(
-      kv("Dim_Song", Seq("track_name"), "song_id"),
-      kv("Dim_Artist", Seq("artists"), "artist_id"),
-      kv("Dim_Album", Seq("album_name"), "album_id"),
-      kv("Dim_Genre", Seq("genero", "subgenero"), "genre_id"),
-      kv("Dim_Category", Seq("category"), "category_id"),
-      kv("Dim_Event", Seq("year", "title", "published_at", "updated_at"), "event_id")
-    ).foldLeft(merged)((df, f) => f(df))
+  def buildFacts(merged: DataFrame): Map[String, DataFrame] = {
+    val keyed = merged.withColumns(Map(
+      "song_id" -> StarSchema.surrogateKey(Seq("track_name")),
+      "artist_id" -> StarSchema.surrogateKey(Seq("artists")),
+      "album_id" -> StarSchema.surrogateKey(Seq("album_name")),
+      "genre_id" -> StarSchema.surrogateKey(Seq("genero", "subgenero")),
+      "category_id" -> StarSchema.surrogateKey(Seq("category")),
+      "event_id" -> StarSchema.surrogateKey(
+        Seq("year", "title", "published_at", "updated_at"))))
 
     // Spotify fact rows need song+artist+album+genre keys; grammy fact rows
     // need song+artist+category+event keys (merge_to_dw.py:254, 288).
     val factSpotify = StarSchema.gateComplete(
-      resolved.where(col("_merge").isin("both", "left_only")),
+      keyed.where(col("_merge").isin("both", "left_only")),
       Seq("song_id", "artist_id", "album_id", "genre_id"))
       .select(col("song_id"), col("artist_id"), col("album_id"),
         col("genre_id"), col("track_id"), col("popularity"),
@@ -147,7 +142,7 @@ object Pipelines {
         col("speechiness"), col("acousticness"), col("instrumentalness"),
         col("liveness"), col("valence"), col("tempo"), col("time_signature"))
     val factGrammy = StarSchema.gateComplete(
-      resolved.where(col("_merge").isin("both", "right_only")),
+      keyed.where(col("_merge").isin("both", "right_only")),
       Seq("song_id", "artist_id", "category_id", "event_id"))
       .select(col("song_id"), col("artist_id"), col("category_id"),
         col("event_id"), col("workers"), col("img"), col("winner"))

@@ -21,12 +21,16 @@ import graft.sources.Tables
   *    star-schema warehouse, each table written as parquet. The merge is
   *    staged once as parquet under `<outDir>/_staging` (the reference's
   *    /tmp hand-off, merge_to_dw.py:120→142), so the 8 tables never
-  *    recompute clean → merge from the CSVs. Then two write waves, dims
-  *    before facts as the reference loads them (merge_to_dw.py:198-300):
-  *    the six dimensions from the staged merge, concurrently; then the two
-  *    facts, their foreign keys resolved against the six WRITTEN
-  *    dimensions, concurrently. The staging directory is deleted when the
-  *    job ends, on success or failure.
+  *    recompute clean → merge from the CSVs. Then one write wave: the six
+  *    dimensions and the two facts, all from the staged merge,
+  *    concurrently. The facts derive their foreign keys from the same
+  *    hash that gives each dimension row its id
+  *    (`StarSchema.surrogateKey`), so they need no written dimension to
+  *    look up — where the reference loads dims before facts and SELECTs
+  *    each id back (merge_to_dw.py:198-300). As in any wave, a table may
+  *    be complete before the others: the warehouse is complete only when
+  *    the job returns. The staging directory is deleted when the job
+  *    ends, on success or failure.
   *  - drive ≙ `merge_spotify_grammys_to_drive` (merge_to_drive.py:39-75):
   *    merge → CSV export. One lazy plan.
   *
@@ -82,22 +86,18 @@ object EtlJobs {
     }
   }
 
-  /** The `etl` load: stage `merged`, write the dimension wave, then the
-    * fact wave against the written dimensions. The staging directory sits
+  /** The `etl` load: stage `merged`, then write all 8 warehouse tables
+    * from it in one concurrent wave. The staging directory sits
     * under `outDir`, not under the driver-local `java.io.tmpdir`, so every
     * executor of a cluster writes and reads the same copy; Spark's readers
     * skip `_`-prefixed directories, so a scan of `outDir` never sees it.
     */
   private[graft] def loadWarehouse(merged: DataFrame, outDir: String): Unit = {
-    val spark = merged.sparkSession
     val staging = new Path(outDir, "_staging")
-    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = staging.getFileSystem(merged.sparkSession.sparkContext.hadoopConfiguration)
     try {
       val staged = Tables.stage(merged, new Path(staging, "merged").toString)
-      val dims = Pipelines.buildDims(staged)
-      writeWave(outDir, dims)
-      writeWave(outDir, Pipelines.buildFacts(staged,
-        dims.map { case (n, _) => n -> spark.read.parquet(s"$outDir/$n") }))
+      writeWave(outDir, Pipelines.buildWarehouse(staged))
     } finally fs.delete(staging, true)
   }
 

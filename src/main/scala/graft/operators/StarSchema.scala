@@ -17,8 +17,12 @@ import org.apache.spark.sql.functions._
   *      + a DETERMINISTIC surrogate key (`xxhash64` of the natural key —
   *      re-derivable anywhere, no driver coordination, no sequence
   *      bottleneck at 100 TB);
-  *   2. facts resolve FKs via broadcast hash joins against the (small)
-  *      dimensions — six map-side joins, zero extra shuffles.
+  *   2. facts DERIVE each FK with the same function ([[surrogateKey]])
+  *      from their own natural-key columns — no lookup, no join, no
+  *      broadcast. So the warehouse's dimensions and facts are
+  *      independent plans over one relation, and can be written
+  *      concurrently. [[resolveFk]] remains for facts whose dimension was
+  *      built from some other relation.
   *
   * Surrogate ids differ from the reference's MySQL AUTO_INCREMENT values
   * but ids are opaque join tokens; every downstream query result is
@@ -30,13 +34,34 @@ object StarSchema {
     * natural-key column is null are dropped (the reference gates dim
     * inserts on key presence, merge_to_dw.py:155, 202-251).
     */
-  def buildDim(src: DataFrame, idCol: String, naturalKey: Seq[String]): DataFrame = {
-    val anyPresent = naturalKey.map(col(_).isNotNull).reduce(_ || _)
+  def buildDim(src: DataFrame, idCol: String, naturalKey: Seq[String]): DataFrame =
     src.select(naturalKey.map(col): _*)
-      .where(anyPresent)
+      .where(anyPresent(naturalKey))
       .dropDuplicates(naturalKey)
-      .withColumn(idCol, xxhash64(naturalKey.map(col): _*))
-  }
+      // surrogateKey's non-null branch: every row left has a key, and the
+      // id column stays non-nullable (REQUIRED in the written parquet).
+      .withColumn(idCol, keyHash(naturalKey))
+
+  /** The one definition of a surrogate id: `xxhash64` of the natural key
+    * when any key component is non-null, else null (an all-null key has
+    * no dimension row, so it has no id).
+    *
+    * A fact that derives its FK with this function gets exactly the id a
+    * [[resolveFk]] join against `buildDim(src, …)` would find, PROVIDED
+    * the dimension was built from the same relation as the facts, or from
+    * a superset of it: then every non-null fact key has its dim row. A
+    * fact key absent from the dimension still gets a (dangling) non-null
+    * id here, where the join gives null — for a dimension from elsewhere,
+    * use [[resolveFk]].
+    */
+  def surrogateKey(naturalKey: Seq[String]): Column =
+    when(anyPresent(naturalKey), keyHash(naturalKey))
+
+  private def keyHash(naturalKey: Seq[String]): Column =
+    xxhash64(naturalKey.map(col): _*)
+
+  private def anyPresent(naturalKey: Seq[String]): Column =
+    naturalKey.map(col(_).isNotNull).reduce(_ || _)
 
   /** J2: resolve one fact FK — left broadcast-join the fact against a dim
     * on the natural key, keeping only the surrogate id. Dimensions are

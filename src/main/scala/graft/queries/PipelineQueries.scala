@@ -34,8 +34,8 @@ import graft.sources.Tables
   * Scale: the chain inherits its operators' plans — the clean step's dedup
   * is ONE hash exchange (Relational.modeOrFirstMulti), the genre lookup is
   * a broadcast join, the merge is a shuffle join AQE can skew-split, and
-  * the warehouse is six broadcast FK joins — nothing here adds a shuffle
-  * beyond those.
+  * the warehouse's fact keys are derived per row, not joined — nothing
+  * here adds a shuffle beyond those.
   */
 object PipelineQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
@@ -173,9 +173,9 @@ object PipelineQueries {
     //
     // The merge output is STAGED first (parquet write + re-scan,
     // Tables.stage): buildWarehouse fans the SAME merged relation into 8
-    // outputs (6 dim distincts + 2 fact joins, the facts each
-    // re-referencing it through 6 FK joins), so without a stage boundary
-    // the clean→merge chain is recomputed per branch. A parquet stage
+    // outputs (6 dim distincts + 2 gated facts, their FKs derived in
+    // place, not joined), so without a stage boundary the clean→merge
+    // chain is recomputed per branch. A parquet stage
     // beats `.persist()` here twice over: each branch scan is
     // column-pruned (a dim build reads 1-4 of the 26 columns), and the
     // in-memory cache's columnar encoding of all 26 columns cost more

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.Pipelines
+import graft.operators.StarSchema
 import graft.sources.Tables
 
 /** End-to-end reference-shaped pipeline tests over the FIXTURES.md §A
@@ -90,21 +91,36 @@ class PipelinesSpec extends AnyFunSuite {
     assert(dangling == 0)
   }
 
-  test("warehouse split: facts resolved against dims read back from parquet") {
-    val wh = Pipelines.buildWarehouse(merged)
+  test("warehouse: derived fact keys equal the ids the dimensions resolve") {
     val dims = Pipelines.buildDims(merged)
-    assert(dims.keySet == wh.keySet.filter(_.startsWith("Dim_")))
-    val dir = java.nio.file.Files.createTempDirectory("warehouse-dims").toString
-    val written = dims.map { case (name, df) =>
-      Tables.writeParquet(df, s"$dir/$name")
-      name -> spark.read.parquet(s"$dir/$name")
+    val fks = Seq(
+      ("Dim_Song", "song_id", Seq("track_name")),
+      ("Dim_Artist", "artist_id", Seq("artists")),
+      ("Dim_Album", "album_id", Seq("album_name")),
+      ("Dim_Genre", "genre_id", Seq("genero", "subgenero")),
+      ("Dim_Category", "category_id", Seq("category")),
+      ("Dim_Event", "event_id", Seq("year", "title", "published_at", "updated_at")))
+    // The join-resolved build: every FK looked up in its dimension.
+    val joined = fks.foldLeft(merged) { case (df, (dim, id, key)) =>
+      StarSchema.resolveFk(df, dims(dim).withColumnsRenamed(Map(
+        "song_name" -> "track_name", "artist_name" -> "artists")), key, id)
     }
-    val facts = Pipelines.buildFacts(merged, written)
-    assert(facts.keySet == Set("Fact_Spotify_Tracks", "Fact_Grammy_Awards"))
-    facts.foreach { case (name, df) =>
-      assert(df.columns.toSeq == wh(name).columns.toSeq, name)
-      assert(df.exceptAll(wh(name)).isEmpty, name)
-      assert(wh(name).exceptAll(df).isEmpty, name)
+    fks.foreach { case (_, id, key) =>
+      assert(!joined.where(col(id).isNotNull).isEmpty, id)
+      assert(joined.where(!(col(id) <=> StarSchema.surrogateKey(key))).isEmpty, id)
+    }
+    val facts = Pipelines.buildFacts(merged)
+    val gates = Map(
+      "Fact_Spotify_Tracks" -> ("left_only", Seq("song_id", "artist_id", "album_id", "genre_id")),
+      "Fact_Grammy_Awards" -> ("right_only", Seq("song_id", "artist_id", "category_id", "event_id")))
+    assert(facts.keySet == gates.keySet)
+    gates.foreach { case (name, (side, ids)) =>
+      val df = facts(name)
+      val expected = StarSchema.gateComplete(
+        joined.where(col("_merge").isin("both", side)), ids)
+        .select(df.columns.toSeq.map(col): _*)
+      assert(!df.isEmpty, name)
+      assert(df.exceptAll(expected).isEmpty && expected.exceptAll(df).isEmpty, name)
     }
   }
 

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
+import graft.etl.{GenreMap, Pipelines}
+import graft.sources.Tables
 
 /** Machine-checked plan audit: the scale-design claims in SCALE.md as
   * assertions on the physical plans of registered queries, so a regression
@@ -15,11 +18,14 @@ class PlanAuditSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String = {
+  private def plan(name: String): String =
+    staticPlan(SparkEntry.queries(name)(spark, dir))
+
+  private def staticPlan(df: => DataFrame): String = {
     val oldAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+      df.queryExecution.executedPlan.toString
     } finally spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
   }
 
@@ -38,6 +44,21 @@ class PlanAuditSpec extends AnyFunSuite {
       "star_fact_counts")) {
       val p = plan(q)
       assert(p.contains("BroadcastHashJoin"), s"$q lost its broadcast:\n$p")
+    }
+  }
+
+  test("warehouse facts derive their keys: no join in either fact plan") {
+    def res(name: String) = getClass.getResource(s"/$name").getPath
+    val merged = Pipelines.mergeSpotifyGrammys(
+      Pipelines.cleanTracks(Tables.readSpotifyCsv(spark, res("spotify_tracks.csv")),
+        GenreMap.df(spark), "row_idx"),
+      Tables.readGrammyCsv(spark, res("the_grammy_awards.csv")))
+    val staged = Tables.stage(merged,
+      java.nio.file.Files.createTempDirectory("audit-staged-merge").toString)
+    for (fact <- Seq("Fact_Spotify_Tracks", "Fact_Grammy_Awards")) {
+      val p = staticPlan(Pipelines.buildWarehouse(staged)(fact))
+      assert(!p.matches("(?s).*(BroadcastHashJoin|SortMergeJoin|" +
+        "ShuffledHashJoin|BroadcastNestedLoopJoin).*"), s"$fact joins:\n$p")
     }
   }
 

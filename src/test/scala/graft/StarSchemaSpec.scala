@@ -39,6 +39,30 @@ class StarSchemaSpec extends AnyFunSuite {
     assert(StarSchema.gateComplete(resolved, Seq("id")).count() == 2)
   }
 
+  test("surrogateKey derives the id resolveFk finds when the dim holds the key") {
+    // The resolveFk fixture above, plus an all-null key: the dimension is
+    // built from the same rows as the facts, except ev3.
+    val key = Seq("title", "published")
+    val dimRows = Seq((Some("ev1"), Some("2020")), (Some("ev2"), None),
+      (None, None))
+    val dim = StarSchema.buildDim(dimRows.toDF(key: _*), "id", key)
+    assert(!dim.schema("id").nullable) // a dimension row always has an id
+    val facts = (dimRows :+ ((Some("ev3"), Some("x")))).toDF(key: _*)
+    val ids = StarSchema.resolveFk(facts, dim, key, "id")
+      .select($"title", $"id", StarSchema.surrogateKey(key).as("derived"))
+      .as[(Option[String], Option[Long], Option[Long])]
+      .collect().map(r => r._1 -> (r._2, r._3)).toMap
+    for (title <- Seq(Some("ev1"), Some("ev2"))) { // full and partial key
+      val (joined, derived) = ids(title)
+      assert(joined.isDefined && derived == joined, title)
+    }
+    assert(ids(None) == ((None, None)))            // all-null key: no id
+    // A key the dimension lacks: the join finds no row, the hash still
+    // derives a (dangling) id — why resolveFk stays for foreign dims.
+    val (joined, derived) = ids(Some("ev3"))
+    assert(joined.isEmpty && derived.isDefined)
+  }
+
   test("upsertDim is stateless and idempotent (hash surrogates)") {
     val d1 = StarSchema.buildDim(Seq("a", "b").toDF("k"), "id", Seq("k"))
     val up = StarSchema.upsertDim(d1, Seq("b", "c").toDF("k"), "id", Seq("k"))
