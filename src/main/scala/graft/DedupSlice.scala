@@ -29,8 +29,10 @@ import java.nio.file.{Files, Paths}
   *     can never drift.
   *  2. SAVINGS REPLAY — scripts/check.py (--neardup-slice) recomputes
   *     components from the dumped pairs with an independent union-find
-  *     (min-id keeper, the [[graft.operators.Dedup.connectedComponents]]
-  *     contract), takes token counts from DuckDB, rebuilds the savings
+  *     (min-id keeper, the contract of
+  *     [[graft.operators.Dedup.connectedComponents]] and the
+  *     [[graft.operators.Graph.connectedComponents]] loop behind it),
+  *     takes token counts from DuckDB, rebuilds the savings
   *     row, and compares the registered `t_dedup_savings` output
   *     bit-exactly. Everything downstream of the pairs is verified on
   *     the FULL table; the pair table itself is verified against the

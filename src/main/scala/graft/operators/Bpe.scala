@@ -17,7 +17,7 @@ import graft.functions.TextFunctions
   *     frequency (map-side combinable aggregate), collect the SINGLE best
   *     pair (one row — the tiny-bounds collect posture), and rewrite the
   *     symbol arrays with a per-row fold. The driver controls only the
-  *     loop, exactly like [[Dedup.connectedComponents]];
+  *     loop, exactly like [[Graph.connectedComponents]];
   *     `localCheckpoint` bounds lineage across rounds.
   *
   * Pair counting uses all adjacent occurrences (the standard ranking

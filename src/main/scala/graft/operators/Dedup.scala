@@ -335,64 +335,25 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** Near-dup CLUSTER assignment: connected components over the candidate
-    * pair graph by iterative min-label propagation — each round every node
-    * takes the minimum label among itself and its neighbors; fixpoint in
-    * O(component diameter) rounds (near-dup clusters are shallow, so
-    * usually 2–3).
+  /** Near-dup CLUSTER assignment: connected components over the pair
+    * graph — [[Graph.connectedComponents]]'s min-label loop, run to its
+    * fixed point (near-dup clusters are shallow, so usually 2–3 rounds;
+    * at most 20).
     *
     * This is the step that turns pairwise near-dup evidence into a dedup
     * DECISION (one keeper per cluster — the minimum id, which is exactly
-    * the converged label). Driver controls only the loop; each round is a
-    * distributed join + aggregate over the edge list, with
-    * `localCheckpoint` truncating the lineage so plan depth stays constant.
-    * At 100 TB use a reliable checkpoint dir instead; rounds remain
-    * O(log n) worst-case, O(diameter) typical.
+    * the converged label). At 100 TB use a reliable checkpoint dir
+    * instead of the loop's `localCheckpoint`; rounds remain O(log n)
+    * worst-case, O(diameter) typical.
     *
     * @param pairs candidate/verified pairs (aCol < bCol, one row per pair)
     * @return DataFrame[node, cluster] for every node appearing in `pairs`
     *         (nodes with no near-dup are singletons and not emitted).
     */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 20): DataFrame = {
-    val fwd = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("cluster", col("node"))
-      .localCheckpoint()
-    // Convergence probe: min-label propagation only ever DECREASES labels,
-    // so the label sum is strictly monotone while anything changes and
-    // equal exactly at the fixed point — one cheap aggregate per round
-    // instead of a self-join + isEmpty scan. Decimal sum: exact and
-    // overflow-free for any id range.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("cluster").cast("decimal(38,0)")))
-        .collect()(0).getDecimal(0)
-    var prevSum = labelSum(labels)
-    // Self-loop fold (r16, guide §2.4): one (n, n) edge per node puts the
-    // node's own label into the neighbor-min, so min ≡ least(own,
-    // coalesce(nbrMin, own)) and each round is ONE join + ONE min
-    // aggregate instead of the neighbor join PLUS a labels re-join.
-    val eSelf = edges.unionByName(
-      labels.select(col("node").as("src"), col("node").as("dst")))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val updated = eSelf
-        .join(labels.withColumnRenamed("node", "dst")
-          .withColumnRenamed("cluster", "nbr_cluster"), Seq("dst"))
-        .groupBy(col("src")).agg(min(col("nbr_cluster")).as("cluster"))
-        .withColumnRenamed("src", "node")
-        .localCheckpoint()
-      val newSum = labelSum(updated)
-      converged = newSum.compareTo(prevSum) == 0
-      prevSum = newSum
-      labels = updated
-      i += 1
-    }
-    labels
-  }
+  def connectedComponents(pairs: DataFrame, aCol: String,
+                          bCol: String): DataFrame =
+    Graph.connectedComponents(pairs, aCol, bCol, rounds = 20)
+      .select(col("node"), col("comp").as("cluster"))
 
   /** Full near-dup dedup: the surviving rows after dropping every cluster
     * member except its keeper (the minimum id). Pairs → components →

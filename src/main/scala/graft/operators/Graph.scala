@@ -3,15 +3,17 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Iterative graph analytics beyond label propagation
-  * ([[Dedup.connectedComponents]]): PageRank — the link-based importance
-  * score web-scale curation pipelines use as a document-quality prior
-  * (rank mass flowing through a hyperlink/citation graph).
+/** Iterative graph analytics: PageRank (plain, personalized, weighted)
+  * — the link-based importance score web-scale curation pipelines use as
+  * a document-quality prior (rank mass flowing through a
+  * hyperlink/citation graph) — plus BFS, label propagation, k-core,
+  * triangles and connected components, whose min-label loop also
+  * clusters near-duplicates ([[Dedup.connectedComponents]]).
   *
   * Determinism across engines: floating-point PageRank sums doubles in
   * shuffle order, so no two runs need agree bitwise. Ranks here are
   * integer micro-units (BIGINT, `scale` = 1.0): every share is an
-  * integral division `rank div outdeg`, every damping step is
+  * integral division `(rank * w) div outw`, every damping step is
   * `(17 * contrib) div 20` (d = 0.85 as an exact rational), and sums of
   * BIGINTs are order-independent — the oracle replays the iterations
   * bit-for-bit as unrolled SQL. Dangling mass (outdeg 0) is dropped, the
@@ -26,81 +28,85 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** `iters` rounds of integer-scaled PageRank over `edges` (src, dst)
-    * for the vertex set `nodes` (id). Returns (id, rank) in micro-units.
+  /** The one PageRank round loop behind [[pagerankInt]],
+    * [[personalizedPagerankInt]] and [[pagerankWeightedInt]], over edges
+    * (src, dst, w: long) and nodes (id, is_seed). Ranks start at `scale`
+    * on seed rows and 0 elsewhere; each round a node's share is
+    * `(r * w) div outw` with `outw` = Σw over its out-edges, and
+    * r = (is_seed ? (3·scale) div 20 : 0) + (17 · Σshares) div 20.
+    *
+    * Both per-round re-read relations are staged ONCE (SCALE.md round 6:
+    * a relation a loop reads every round is materialized, never lazy):
+    * the node set enters the initial ranks AND every round's left join,
+    * and `outw` is pre-joined onto the edges (round 15) so a round pays
+    * one ranks join, not a second degree join. Left lazy, each round
+    * would re-run their full upstream lineage (for the co-purchase
+    * caller that lineage is the lineitem basket self-join: 4 rebuilds
+    * measured at 11.8 s isolated vs 4.5 s staged). Both are |V|- or
+    * |E|-row relations — cheap to hold, expensive to recompute. The seed
+    * flag rides the node table, so personalization costs no extra join.
     */
-  def pagerankInt(edges: DataFrame, nodes: DataFrame, iters: Int,
-                  scale: Long = 1000000L): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    // outdeg is static across rounds — pre-join it onto the edge list
-    // ONCE (round 15, guide §2.4 "remove shuffles outright"): each round
-    // then pays one ranks join instead of a ranks join plus a rebuilt
-    // degree aggregate + second join.
-    val eDeg = e
-      .join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
+  private def pagerankLoop(edges: DataFrame, nodes: DataFrame, iters: Int,
+                           scale: Long): DataFrame = {
+    val n0 = nodes.localCheckpoint()
+    val eW = edges
+      .join(edges.groupBy(col("src")).agg(sum(col("w")).as("outw")), "src")
       .localCheckpoint()
     // (1-d)*scale with d = 17/20: exact in integers.
     val base = (scale * 3L) / 20L
-    var ranks = nodes.select(col("id"), lit(scale).as("r"))
+    var ranks = n0.select(col("id"),
+      when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("r"))
     (1 to iters).foreach { _ =>
-      val msgs = eDeg
-        .join(ranks, eDeg("src") === ranks("id"))
+      val msgs = eW
+        .join(ranks, eW("src") === ranks("id"))
         .select(col("dst").as("id"),
-          expr("r div outdeg").as("share"))
+          expr("(r * w) div outw").as("share"))
         .groupBy(col("id")).agg(sum(col("share")).as("contrib"))
-      ranks = nodes.select(col("id"))
+      ranks = n0
         .join(msgs, Seq("id"), "left")
         .select(col("id"),
-          (lit(base) +
-            expr(s"(17 * coalesce(contrib, 0L)) div 20")).as("r"))
+          (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
+            expr("(17 * coalesce(contrib, 0L)) div 20")).as("r"))
         .localCheckpoint()
     }
     ranks.withColumnRenamed("r", "rank")
   }
 
+  /** `iters` rounds of integer-scaled PageRank over `edges` (src, dst)
+    * for the vertex set `nodes` (id). Returns (id, rank) in micro-units.
+    * Unit weights, every node a seed: (r·1) div Σ1 = r div outdeg.
+    */
+  def pagerankInt(edges: DataFrame, nodes: DataFrame, iters: Int,
+                  scale: Long = 1000000L): DataFrame =
+    pagerankLoop(edges.select(col("src"), col("dst"), lit(1L).as("w")),
+      nodes.select(col("id"), lit(true).as("is_seed")), iters, scale)
+
   /** PERSONALIZED PageRank (topic-sensitive, Haveliwala): the restart
     * mass returns only to the SEED set, so rank measures importance
     * *relative to the seeds* — "documents like these trusted ones", the
     * seed-expansion primitive behind quality-prior propagation and
-    * related-item discovery. Same integer micro-unit discipline as
-    * [[pagerankInt]] (share = r div outdeg, damping (17·c) div 20,
-    * BIGINT sums — bit-reproducible, oracle unrolls the rounds) with
-    * two changes: r₀ = scale on seeds / 0 elsewhere, and the (3·scale)
-    * div 20 restart term lands only on seed rows. Same Pregel-lite
-    * shape — one join + one map-side-combinable sum per round; the
-    * seed flag rides the rank table as a column, so personalization
-    * costs no extra join.
+    * related-item discovery. [[pagerankInt]] with two changes: r₀ =
+    * scale on seeds / 0 elsewhere, and the (3·scale) div 20 restart term
+    * lands only on seed rows.
     */
   def personalizedPagerankInt(edges: DataFrame, nodes: DataFrame,
                               seeds: DataFrame, iters: Int,
-                              scale: Long = 1000000L): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    // Static outdeg pre-joined once, as in [[pagerankInt]] (round 15).
-    val eDeg = e
-      .join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
-      .localCheckpoint()
-    val base = (scale * 3L) / 20L
-    val flagged = nodes.select(col("id"))
-      .join(seeds.select(col("id"), lit(true).as("_s")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("_s"), lit(false)).as("is_seed"))
-      .localCheckpoint()
-    var ranks = flagged.select(col("id"), col("is_seed"),
-      when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("r"))
-    (1 to iters).foreach { _ =>
-      val msgs = eDeg
-        .join(ranks.select(col("id"), col("r")), eDeg("src") === col("id"))
-        .select(col("dst").as("id"),
-          expr("r div outdeg").as("share"))
-        .groupBy(col("id")).agg(sum(col("share")).as("contrib"))
-      ranks = flagged
-        .join(msgs, Seq("id"), "left")
-        .select(col("id"), col("is_seed"),
-          (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
-            expr(s"(17 * coalesce(contrib, 0L)) div 20")).as("r"))
-        .localCheckpoint()
-    }
-    ranks.select(col("id"), col("r").as("rank"))
-  }
+                              scale: Long = 1000000L): DataFrame =
+    pagerankLoop(edges.select(col("src"), col("dst"), lit(1L).as("w")),
+      nodes.select(col("id"))
+        .join(seeds.select(col("id"), lit(true).as("_s")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("_s"), lit(false)).as("is_seed")),
+      iters, scale)
+
+  /** WEIGHTED PageRank: rank mass splits across out-edges proportional
+    * to edge weight `w` — co-purchase support, citation multiplicity —
+    * instead of uniformly: share = (r·w) div Σw_out.
+    */
+  def pagerankWeightedInt(edges: DataFrame, nodes: DataFrame, iters: Int,
+                          scale: Long = 1000000L): DataFrame =
+    pagerankLoop(
+      edges.select(col("src"), col("dst"), col("w").cast("long")),
+      nodes.select(col("id"), lit(true).as("is_seed")), iters, scale)
 
   /** Multi-source BFS: minimum hop distance from any seed, bounded to
     * `rounds` expansions — reachability-with-distance (influence radius,
@@ -137,6 +143,38 @@ object Graph {
     reached
   }
 
+  /** Both directions of every edge of an undirected list as (src, dst):
+    * self-loops drop, duplicates collapse, and a null endpoint drops too
+    * (its `=!=` is null). Staged: every round of the caller reads it.
+    */
+  private def symmetricEdges(edges: DataFrame, aCol: String,
+                             bCol: String): DataFrame = {
+    val fwd = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
+    fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
+      .where(col("src") =!= col("dst"))
+      .distinct()
+      .localCheckpoint()
+  }
+
+  /** One row per undirected edge as (a, b) with a < b: (a,b), (b,a) and
+    * duplicates collapse to one edge, self-loops and null endpoints drop
+    * (`least`/`greatest` skip a null, so its edge becomes a self-loop).
+    * Staged: its callers read it several times.
+    */
+  private def undirectedEdges(edges: DataFrame, aCol: String,
+                              bCol: String): DataFrame =
+    edges
+      .select(least(col(aCol), col(bCol)).as("a"),
+        greatest(col(aCol), col(bCol)).as("b"))
+      .where(col("a") =!= col("b"))
+      .distinct()
+      .localCheckpoint()
+
+  /** (n, d): each node's degree in an [[undirectedEdges]] list. */
+  private def degrees(e: DataFrame): DataFrame = e
+    .select(explode(array(col("a"), col("b"))).as("n"))
+    .groupBy(col("n")).agg(count(lit(1)).as("d"))
+
   /** Community detection by MAJORITY-VOTE label propagation — coarser
     * than connected components (which only needs reachability): a node
     * adopts the most common label among its neighbors, so densely
@@ -153,13 +191,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
                        rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val fwd = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-    val e = fwd.unionByName(
-        fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst") &&
-        col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint()
+    val e = symmetricEdges(edges, aCol, bCol)
     var labels = e.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node"))
       .localCheckpoint()
@@ -175,49 +207,6 @@ object Graph {
         .localCheckpoint()
     }
     labels.select(col("node"), col("lbl").as("community"))
-  }
-
-  /** WEIGHTED PageRank: rank mass splits across out-edges proportional
-    * to edge weight — co-purchase support, citation multiplicity —
-    * instead of uniformly. Same integer micro-unit discipline as
-    * [[pagerankInt]]: share = (r·w) div Σw_out, damping (17·c) div 20,
-    * sums of BIGINTs — bit-reproducible, oracle unrolls the rounds.
-    * Same Pregel-lite shape: one join + one map-side-combinable sum per
-    * round.
-    */
-  def pagerankWeightedInt(edges: DataFrame, nodes: DataFrame, iters: Int,
-                          scale: Long = 1000000L): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long"))
-      .localCheckpoint()
-    // Materialize the per-round re-read relations ONCE: `nodes` enters
-    // the initial ranks AND every round's left join, and `outW` every
-    // round's share division — left lazy, each round would re-run their
-    // full upstream lineage (for the co-purchase caller that lineage is
-    // the lineitem basket self-join: 4 rebuilds measured at 11.8 s
-    // isolated vs 4.5 s staged). Both are |V|-row relations — cheap to
-    // hold, expensive to recompute.
-    val n0 = nodes.select(col("id")).localCheckpoint()
-    // Static Σw_out pre-joined onto the edges once (round 15) — each
-    // round then pays one ranks join, not a join + a second outW join.
-    val eW = e
-      .join(e.groupBy(col("src")).agg(sum(col("w")).as("outw")), "src")
-      .localCheckpoint()
-    val base = (scale * 3L) / 20L
-    var ranks = n0.select(col("id"), lit(scale).as("r"))
-    (1 to iters).foreach { _ =>
-      val msgs = eW
-        .join(ranks, eW("src") === ranks("id"))
-        .select(col("dst").as("id"),
-          expr("(r * w) div outw").as("share"))
-        .groupBy(col("id")).agg(sum(col("share")).as("contrib"))
-      ranks = n0
-        .join(msgs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) +
-            expr(s"(17 * coalesce(contrib, 0L)) div 20")).as("r"))
-        .localCheckpoint()
-    }
-    ranks.withColumnRenamed("r", "rank")
   }
 
   /** k-core decomposition by iterative peeling: repeatedly delete
@@ -239,16 +228,7 @@ object Graph {
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
             rounds: Int = 8): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k>=1, rounds>=1: k=$k $rounds")
-    var e = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .where(col("a") =!= col("b") &&
-        col("a").isNotNull && col("b").isNotNull)
-      .distinct()
-      .localCheckpoint()
-    def degrees(ed: DataFrame) = ed
-      .select(explode(array(col("a"), col("b"))).as("n"))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
+    var e = undirectedEdges(edges, aCol, bCol)
     for (_ <- 1 to rounds) {
       val keep = degrees(e).where(col("d") >= k).select(col("n"))
       e = e.join(keep.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
@@ -285,15 +265,8 @@ object Graph {
     */
   def triangleCount(edges: DataFrame, aCol: String, bCol: String)
       : DataFrame = {
-    val e = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .where(col("a") =!= col("b") &&
-        col("a").isNotNull && col("b").isNotNull)
-      .distinct()
-      .localCheckpoint() // read 3×: degrees, wedges (×2), closure
-    val deg = e.select(explode(array(col("a"), col("b"))).as("n"))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
+    val e = undirectedEdges(edges, aCol, bCol) // degrees, wedges, closure
+    val deg = degrees(e)
     // Orient low (d, id) → high (d, id): struct comparison gives the
     // total order, ties broken by id.
     val oriented = e
@@ -317,20 +290,26 @@ object Graph {
 
   /** EXACT connected components by min-label propagation: every node
     * starts labeled with its own id; each round every node adopts the
-    * minimum label in its closed neighborhood. After `rounds` rounds a
-    * node's label is the minimum node id within `rounds` hops, so the
-    * labeling is exactly the component minimum once `rounds` reaches the
-    * component diameter — `converged` reports whether any edge still
-    * straddles two labels, computed FROM THE DATA so the contract stays
-    * honest if rounds ever under-run (kCore posture).
+    * minimum label in its closed neighborhood. After r rounds a node's
+    * label is the minimum node id within r hops, so the labeling is
+    * exactly the component minimum once r reaches the component
+    * diameter.
     *
-    * Sibling of [[graft.operators.Dedup.connectedComponents]] (the
-    * production path for near-dup clusters / golden records), which
-    * iterates to ACTUAL convergence via a label-sum probe — a
-    * data-dependent round count no SQL oracle can replay. This variant
-    * runs a FIXED round budget so the DuckDB oracle unrolls the
-    * identical rounds and compares bit-for-bit, and reports honestly
-    * when the budget under-ran.
+    * The loop stops at the fixed point: the first round that changes no
+    * label, or after `rounds` rounds, whichever comes first. Every round
+    * after the fixed point is the identity, so the output equals the
+    * full fixed-round result the DuckDB oracle unrolls (`g_concomp`),
+    * bit-for-bit. The probe is the label sum: min-label propagation
+    * only ever DECREASES labels, so the sum is strictly monotone while
+    * anything changes and equal exactly at the fixed point — one cheap
+    * aggregate per round instead of a self-join + isEmpty scan. Decimal
+    * sum: exact and overflow-free for any id range.
+    *
+    * `converged` reports whether any edge still straddles two labels.
+    * When the loop stopped early it is true by construction (unchanged
+    * labels mean no edge joins two of them); when the budget ran out it
+    * is computed FROM THE DATA (kCore posture), so the contract stays
+    * honest if rounds under-run the diameter.
     *
     * This is the exact dual of [[labelPropagation]]'s majority vote:
     * same Pregel-lite shape — per round ONE equi-join (labels onto the
@@ -338,24 +317,24 @@ object Graph {
     * both hash-shuffled on the node key; `localCheckpoint` caps lineage
     * so round R costs one bounded job, not an R-deep nested plan. At
     * cluster scale the round count is the graph diameter — for web/
-    * co-occurrence graphs a dozen rounds; pathological chain graphs
-    * would instead use star-contraction (Kiveris et al., "Connected
-    * Components in MapReduce"), whose alternating min-rounds this same
-    * loop body expresses.
+    * co-occurrence graphs a dozen rounds, near-dup clusters usually 2–3;
+    * pathological chain graphs would instead use star-contraction
+    * (Kiveris et al., "Connected Components in MapReduce"), whose
+    * alternating min-rounds this same loop body expresses.
+    *
+    * @return (node, comp, converged) for every node of a non-self-loop
+    *         edge; an empty edge list gives no rows.
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
                           rounds: Int = 6): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val fwd = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-    val e = fwd.unionByName(
-        fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst") &&
-        col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint()
+    val e = symmetricEdges(edges, aCol, bCol)
     var labels = e.select(col("src").as("node")).distinct()
       .withColumn("comp", col("node"))
       .localCheckpoint()
+    def labelSum(df: DataFrame): java.math.BigDecimal =
+      df.agg(sum(col("comp").cast("decimal(38,0)")))
+        .collect()(0).getDecimal(0)
     // Self-loop fold (r16, guide §2.4): appending one (n, n) edge per
     // node makes the neighbor-min INCLUDE the node's own label, so
     // min(_nc) ≡ least(comp, neighbor min) and each round is ONE join +
@@ -364,23 +343,35 @@ object Graph {
     // term. The union of two checkpointed relations costs no recompute.
     val eSelf = e.unionByName(
       labels.select(col("node").as("src"), col("node").as("dst")))
-    (1 to rounds).foreach { _ =>
+    var prevSum = labelSum(labels)
+    var fixed = false
+    var i = 0
+    while (!fixed && i < rounds) {
       labels = eSelf
         .join(labels.withColumnRenamed("node", "dst")
           .withColumnRenamed("comp", "_nc"), Seq("dst"))
         .groupBy(col("src")).agg(min(col("_nc")).as("comp"))
         .withColumnRenamed("src", "node")
         .localCheckpoint()
+      val newSum = labelSum(labels)
+      // No labels sum to null: an empty graph is its own fixed point.
+      fixed = newSum == null || newSum.compareTo(prevSum) == 0
+      prevSum = newSum
+      i += 1
     }
-    // Converged ⇔ no edge joins two different labels (data-derived).
-    val open = e
-      .join(labels.select(col("node").as("src"), col("comp").as("ca")),
-        Seq("src"))
-      .join(labels.select(col("node").as("dst"), col("comp").as("cb")),
-        Seq("dst"))
-      .agg(coalesce(sum(when(col("ca") =!= col("cb"), 1L).otherwise(0L)),
-        lit(0L)).as("_open"))
-    labels.crossJoin(broadcast(open))
-      .select(col("node"), col("comp"), (col("_open") === 0L).as("converged"))
+    if (fixed) labels.withColumn("converged", lit(true))
+    else {
+      // Converged ⇔ no edge joins two different labels (data-derived).
+      val open = e
+        .join(labels.select(col("node").as("src"), col("comp").as("ca")),
+          Seq("src"))
+        .join(labels.select(col("node").as("dst"), col("comp").as("cb")),
+          Seq("dst"))
+        .agg(coalesce(sum(when(col("ca") =!= col("cb"), 1L).otherwise(0L)),
+          lit(0L)).as("_open"))
+      labels.crossJoin(broadcast(open))
+        .select(col("node"), col("comp"),
+          (col("_open") === 0L).as("converged"))
+    }
   }
 }

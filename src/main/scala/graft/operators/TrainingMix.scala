@@ -110,7 +110,9 @@ object TrainingMix {
     * joined; no RNG, identical on re-runs and across engines.
     *
     * @param clusters (node, cluster) labels from
-    *                 [[Dedup.connectedComponents]] over near-dup pairs.
+    *                 [[Dedup.connectedComponents]] (the near-dup face
+    *                 of [[Graph.connectedComponents]]) over near-dup
+    *                 pairs.
     * @return (idCol, cluster, split ∈ test|val|train)
     */
   def splitAssignments(docs: DataFrame, idCol: String, clusters: DataFrame,

@@ -63,15 +63,8 @@ class GraphSpec extends AnyFunSuite {
         edges.withColumn("w", org.apache.spark.sql.functions.lit(5L)),
         nodes, iters = 3)
       .as[(Long, Long)].collect().toMap
-    // Equal weights split shares identically — up to the integer-div
-    // quantization of (r·w) div Σw vs r div outdeg, which agree when
-    // w is constant: (r·w) div (k·w) = r div k only when w | r·w
-    // remainders align; with w=5 and k out-edges both floor the same
-    // rational r/k... allow ±k per rank for the rounding gap.
-    unweighted.foreach { case (id, r) =>
-      assert(math.abs(weighted(id) - r) <= 3L,
-        s"node $id: weighted ${weighted(id)} vs unweighted $r")
-    }
+    // For integer w ≥ 1, (r·w) div (k·w) = r div k exactly.
+    assert(weighted == unweighted)
   }
 
   test("personalized pagerank: chain matches hand-computed seed flow") {
@@ -169,6 +162,21 @@ class GraphSpec extends AnyFunSuite {
     // Each round propagates the minimum at least one hop.
     val comp = out.map(r => r._1 -> r._2).toMap
     assert(comp(2L) == 0L && comp(8L) > 0L)
+  }
+
+  test("connected components: converged reflects the last round's labels") {
+    // Chain 0–1–2: round 2 still changes node 2's label but reaches the
+    // fixed point, so the budget runs out converged; one round does not.
+    val edges = Seq((0L, 1L), (1L, 2L)).toDF("a", "b")
+    val two = Graph.connectedComponents(edges, "a", "b", rounds = 2)
+      .as[(Long, Long, Boolean)].collect()
+    assert(two.map(_._1).sorted.toSeq == Seq(0L, 1L, 2L))
+    assert(two.forall(r => r._2 == 0L && r._3))
+    val one = Graph.connectedComponents(edges, "a", "b", rounds = 1)
+      .as[(Long, Long, Boolean)].collect()
+    assert(one.forall(!_._3))
+    val none = Graph.connectedComponents(edges.limit(0), "a", "b")
+    assert(none.isEmpty)
   }
 
   test("total mass never exceeds the initial mass") {

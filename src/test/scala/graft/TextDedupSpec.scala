@@ -218,6 +218,19 @@ class TextDedupSpec extends AnyFunSuite {
     assert(kept.toSeq == Seq(1L, 3L))
   }
 
+  test("connectedComponents: no pairs give no clusters, nothing is dropped") {
+    val none = Dedup.connectedComponents(
+      Seq.empty[(Long, Long)].toDF("id_a", "id_b"), "id_a", "id_b")
+    assert(none.isEmpty)
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog today"),
+      (2L, "completely unrelated text about database engines and joins"))
+      .toDF("doc_id", "text")
+    val kept = Dedup.nearDedupKept(docs, "doc_id", "text", 0.5)
+      .select($"doc_id").as[Long].collect().sorted
+    assert(kept.toSeq == Seq(1L, 2L))
+  }
+
   test("cosineNearDupPairs: blocked pairs above threshold, no cross-block") {
     val vecs = Seq(
       (1L, Seq(1.0f, 0.0f), 0), (2L, Seq(0.99f, 0.01f), 0), // near-dups
