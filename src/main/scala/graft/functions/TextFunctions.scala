@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 
 /** Text-analysis column functions for the LLM-data-pipeline surface.
   *
@@ -14,9 +15,16 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
+  /** Spark `lower` on a UTF8_BINARY string, value for value, through the
+    * native [[LowerUtf8]] kernel — the engine's one lowercase (see
+    * [[CaseKernels]] for why it is not `functions.lower`).
+    */
+  def lowerUtf8(c: Column): Column =
+    PlanBridge.column(LowerUtf8(PlanBridge.expression(c)))
+
   /** Whitespace tokenization after trim+lowercase. */
   def tokens(text: Column): Column =
-    split(lower(trim(text)), "\\s+")
+    split(lowerUtf8(trim(text)), "\\s+")
 
   /** Token count; empty/blank text counts 0 (split would yield [""]). */
   def tokenCount(text: Column): Column =
@@ -131,7 +139,7 @@ object TextFunctions {
     * tuning knob left out of the parity surface). Per-row, map-side.
     */
   def charNgramScores(text: Column): Seq[(String, Column)] = {
-    val lt = lower(text)
+    val lt = lowerUtf8(text)
     charTrigrams.map { case (lang, grams) =>
       lang -> grams.map(g => contains(lt, lit(g)).cast("long")).reduce(_ + _)
     }

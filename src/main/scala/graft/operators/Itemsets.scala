@@ -38,12 +38,15 @@ object Itemsets {
     // the serial scan-side partial distinct it would parallelize
     // (fi_*/g_* steady-state mins rose ~0.2-0.5 s each under a spread).
     //
-    // Partitioned BY BASKET before the distinct (round 16, guide §2.4
-    // "share one exchange"): hashpartitioning(bk) satisfies the distinct's
-    // (bk, it) clustering AND the pair self-join's bk clustering, so the
-    // staged relation is born with the layout every downstream join
-    // needs — the pre-r16 (bk, it)-hash staging forced BOTH self-join
-    // inputs through a second exchange in all ~22 fi_*/g_* consumers.
+    // Partitioned BY BASKET before the distinct (round 16):
+    // hashpartitioning(bk) satisfies the distinct's (bk, it) clustering,
+    // so the distinct runs without a second exchange. The layout does NOT
+    // survive staging: in Spark 4.1.2 a localCheckpoint() result reports
+    // UnknownPartitioning(0) (AQE on or off), so a pair self-join too big
+    // to broadcast plans `Exchange hashpartitioning(bk, n),
+    // ENSURE_REQUIREMENTS` above the staged `Scan ExistingRDD` on each
+    // side. Only an unstaged relation would reuse this REPARTITION_BY_COL
+    // exchange.
     baskets.select(col(basketCol).as("bk"), col(itemCol).as("it"))
       .where(col("bk").isNotNull && col("it").isNotNull)
       .repartition(col("bk"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions
 
 /** Core relational operators (SURVEY.md §2.2–§2.4) as reusable,
   * plan-friendly building blocks. Everything here stays inside
@@ -15,9 +16,15 @@ object Relational {
     * `fillna("")` semantics — SURVEY.md §7.4.1), cast to string, trim,
     * lowercase. Applied to BOTH sides before any equi-join that must
     * reproduce the reference's matching.
+    *
+    * The lowercase is the native [[graft.functions.LowerUtf8]] kernel,
+    * value-identical to Spark's `lower`: Spark 4.1.2's `lower` builds
+    * `CollationAwareUTF8String`'s title-case lookup table on its first
+    * call in a JVM (1.6–1.9 s on a 4-core host, ASCII keys or not), and
+    * this is the first lowercase of the `etl` job.
     */
   def normalizeKey(c: Column): Column =
-    lower(trim(coalesce(c.cast("string"), lit(""))))
+    TextFunctions.lowerUtf8(trim(coalesce(c.cast("string"), lit(""))))
 
   def normalizeKeys(df: DataFrame, keys: Seq[String]): DataFrame =
     keys.foldLeft(df)((d, k) => d.withColumn(k, normalizeKey(col(k))))
@@ -50,10 +57,13 @@ object Relational {
     * limpiezaSpotify.py:59-61; SURVEY.md §7.4.2). Spark's built-in
     * `mode()` is tie-nondeterministic, so this is the two-level aggregate
     * rewrite: count per (group, value), then `min_by` on
-    * (-count, value) — one extra partial-aggregated shuffle, fully
-    * codegen'd, no custom UDAF needed. Negating the COUNT (always a long)
-    * rather than the value keeps the tie-break type-agnostic: string,
-    * date, or numeric mode columns all order natively.
+    * (-count, value) — one extra partial-aggregated shuffle, no custom
+    * UDAF needed. The struct-ordered `min_by` buffer has no hash or
+    * codegen'd aggregate form, so the second level plans as a
+    * non-codegen `SortAggregate` (SCALE.md, cleaning pipeline).
+    * Negating the COUNT (always a long) rather than the value keeps the
+    * tie-break type-agnostic: string, date, or numeric mode columns all
+    * order natively.
     *
     * @return DataFrame[groupCol, modeCol] with one row per group.
     */

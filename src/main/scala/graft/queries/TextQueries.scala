@@ -252,7 +252,7 @@ object TextQueries {
     // RE2 agree on this grammar); ratio is one exact-int division.
     "t_tokens_regex" -> ((s, d) => {
       val pat = "'(s|t|re|ve|m|ll|d)| ?[a-z]+| ?[0-9]+| ?[^a-z0-9\\s]+|\\s+"
-      val nBpe = regexp_count(lower(col("text")), lit(pat))
+      val nBpe = regexp_count(TextFunctions.lowerUtf8(col("text")), lit(pat))
       val nWs = TextFunctions.tokenCount(col("text"))
       docs(s, d).select(col("doc_id"),
           nWs.as("n_ws"), nBpe.cast("long").as("n_bpe"),
@@ -1053,7 +1053,7 @@ object TextQueries {
     // simplified to classes both regex engines treat identically).
     "t_tokens_bpe" -> ((s, d) =>
       docs(s, d).select(col("doc_id"),
-        size(regexp_extract_all(lower(col("text")),
+        size(regexp_extract_all(TextFunctions.lowerUtf8(col("text")),
           lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0)))
           .cast("long").as("n_bpe_tokens"))
         .orderBy(col("doc_id"))),
@@ -1085,7 +1085,7 @@ object TextQueries {
       val stop = Seq("the", "and", "of", "is", "to")
       val symbolFrac = when(length(col("text")) === 0, lit(0.0))
         .otherwise(
-          length(regexp_replace(lower(col("text")), "[a-z0-9\\s]", ""))
+          length(regexp_replace(TextFunctions.lowerUtf8(col("text")), "[a-z0-9\\s]", ""))
             .cast("double") / length(col("text")))
       val alphaFrac = size(filter(ws, w => w.rlike("[a-z]")))
         .cast("double") / size(ws)
@@ -1142,7 +1142,7 @@ object TextQueries {
       val ws0 = TextFunctions.tokens(col("text"))
       val symbolFrac = when(length(col("text")) === 0, lit(0.0))
         .otherwise(
-          length(regexp_replace(lower(col("text")), "[a-z0-9\\s]", ""))
+          length(regexp_replace(TextFunctions.lowerUtf8(col("text")), "[a-z0-9\\s]", ""))
             .cast("double") / length(col("text")))
       val alphaFrac = size(filter(ws0, w => w.rlike("[a-z]")))
         .cast("double") / size(ws0)
@@ -1624,7 +1624,7 @@ object TextQueries {
       val ws = filter(TextFunctions.tokens(col("text")),
         w => length(w) > 0)
       val scored = docs(s, d).select(col("doc_id"),
-          md5(lower(trim(col("text")))).as("h"), col("n_chars"),
+          md5(TextFunctions.lowerUtf8(trim(col("text")))).as("h"), col("n_chars"),
           (lit(-800L) * size(ws).cast("long") +
             lit(3000L) * size(filter(ws,
               w => w === "the" || w === "a")).cast("long") +
@@ -1918,10 +1918,10 @@ object TextQueries {
       def scan(df: DataFrame, table: String, column: String,
                c: org.apache.spark.sql.Column) =
         df.agg(count(lit(1)).as("n_rows"),
-          sum(when(TextFunctions.piiCount(lower(c),
+          sum(when(TextFunctions.piiCount(TextFunctions.lowerUtf8(c),
             TextFunctions.EmailRegex) > 0, 1L).otherwise(0L))
             .as("email_rows"),
-          sum(when(TextFunctions.piiCount(lower(c),
+          sum(when(TextFunctions.piiCount(TextFunctions.lowerUtf8(c),
             TextFunctions.PhoneRegex) > 0, 1L).otherwise(0L))
             .as("phone_rows"))
           .select(lit(table).as("tbl"), lit(column).as("col"),

@@ -1,8 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Lower
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.{GenreMap, Pipelines}
+import graft.functions.{LowerUtf8, TextFunctions}
 import graft.sources.Tables
 
 /** Machine-checked plan audit: the scale-design claims in SCALE.md as
@@ -59,6 +62,25 @@ class PlanAuditSpec extends AnyFunSuite {
       val p = staticPlan(Pipelines.buildWarehouse(staged)(fact))
       assert(!p.matches("(?s).*(BroadcastHashJoin|SortMergeJoin|" +
         "ShuffledHashJoin|BroadcastNestedLoopJoin).*"), s"$fact joins:\n$p")
+    }
+  }
+
+  test("the ETL merge and tokenization lowercase through the native kernel") {
+    // Spark's Lower builds CollationAwareUTF8String's title-case table on
+    // its first call in a JVM (1.6-1.9 s, graft.functions.CaseKernels); a
+    // lower() put back on the ETL path brings that cost back.
+    def res(name: String) = getClass.getResource(s"/$name").getPath
+    val merged = Pipelines.mergeSpotifyGrammys(
+      Pipelines.cleanTracks(Tables.readSpotifyCsv(spark, res("spotify_tracks.csv")),
+        GenreMap.df(spark), "row_idx"),
+      Tables.readGrammyCsv(spark, res("the_grammy_awards.csv")))
+    val tokens = spark.range(1).select(
+      TextFunctions.tokens(col("id").cast("string")))
+    for ((name, df) <- Seq("mergeSpotifyGrammys" -> merged, "tokens" -> tokens)) {
+      val exprs = df.queryExecution.analyzed.collect { case n => n.expressions }
+        .flatten.flatMap(_.collect { case e => e })
+      assert(!exprs.exists(_.isInstanceOf[Lower]), s"$name calls Spark lower")
+      assert(exprs.exists(_.isInstanceOf[LowerUtf8]), s"$name lost the kernel")
     }
   }
 
